@@ -1,0 +1,5 @@
+"""Benchmark harness for pcompress_spark: batch dedup and incremental ingest.
+
+Entry point: `python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>` from the repository root. See run.py.
+"""
